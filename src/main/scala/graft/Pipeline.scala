@@ -49,9 +49,6 @@ object Pipeline {
 
   def cachedIndex(spark: SparkSession, nGenes: Int = DefaultGenes,
                   seed: Long = DefaultSeed): Broadcast[DimIndex] = {
-    // session bootstrap: JIT/codegen warm-up sweep, once per session
-    // (see SessionWarmup — pure code warming, no data any query reuses)
-    SessionWarmup.ensure(spark)
     indexCache.getOrElseUpdate(
       (spark.sparkContext.applicationId, nGenes, seed),
       buildIndex(spark, nGenes, seed))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.model.Cts
 
 /** Cancer-type-specificity (ct) classification and selection —
   * the reference's `classify_diseases` / `annotate_ct` / `filter_ct`
@@ -75,4 +76,25 @@ object CtClassifier {
         throw new IllegalArgumentException(s"bad ct selection '$other'")
       case Right(list) => annotated.filter(col("ct").isin(list: _*))
     }
+
+  /** Driver-side `annotate` + `select` over collected rows labelled by
+    * `ctLabel` (the form `DimIndex.build` and `OutputAssembly
+    * .buildRenders` use: one collect, no window shuffle). Null-labelled
+    * (deny-listed) rows drop; `group` is the row's (gene, var, mp,
+    * evidence_type). DimShuffleSpec pins both against their
+    * distributed forms on `select`.
+    */
+  def selectLocal[T](rows: Seq[T], selectCt: Either[String, Seq[String]])(
+      ct: T => String, group: T => Any): Seq[T] = {
+    val kept = rows.filter(r => ct(r) != null)
+    selectCt match {
+      case Left("all") => kept
+      case Left("highest") =>
+        val best = kept.groupMapReduce(group)(r => Cts.rank(ct(r)))(math.min)
+        kept.filter(r => Cts.rank(ct(r)) == best(group(r)))
+      case Left(other) =>
+        throw new IllegalArgumentException(s"bad ct selection '$other'")
+      case Right(list) => kept.filter(r => list.contains(ct(r)))
+    }
+  }
 }

@@ -79,49 +79,83 @@ object DimIndex {
       isExprRecord = Nomenclature.isExprRecordName(nameUpper))
   }
 
+  /** One variant record: name and hgvs from its smallest-`dim_order`
+    * row, `var_order` = that `dim_order` (scan-order position key).
+    */
+  final case class VariantRec(gene_key: String, var_id: String,
+      var_name: String, hgvs: Seq[String], var_order: Long)
+
+  /** The columns of one dimension row the broadcast build reads, with
+    * its `CtClassifier.ctLabel` (null when deny-listed).
+    */
+  final case class IndexLeaf(gene_key: String, var_id: String,
+      var_name: String, hgvs: Seq[String], dim_order: Long, mp_id: String,
+      evidence_type: String, drug: String, direction: String,
+      significance: String, ct: String)
+
+  /** `drugSupportClass` values in `varSupCnt`'s packed count order. */
+  private val SupportClasses =
+    Seq("POSITIVE", "NEGATIVE", "UNKNOWN_BLANK", "UNKNOWN_DNS")
+
   /** Build the index from a flat evidence DataFrame (EvidenceRow
     * schema). `dim` should already be evidence-filtered
     * (EvidenceFilter); ct annotation/selection happens here because the
     * support vectors depend on it.
     *
-    * `withConsensus = false` skips the consensus-count collect — the
-    * over-broadcast-threshold regime, where `DimShuffle
-    * .consensusAnnotate` re-derives `ds_tier_*` with shuffle joins
-    * instead of driver-collected count vectors (the kernel then emits
-    * empty support lists).
+    * Broadcast regime (`withConsensus = true`): ONE collect of the
+    * ct-labelled dimension; the variant list (taken before ct
+    * filtering, so a variant whose rows are all deny-listed keeps its
+    * slot), the ct selection (`CtClassifier.selectLocal`) and the
+    * PREDICTIVE support counts per (gene, var, drug, ct) are derived on
+    * the driver. This is the driver-side form of
+    * `DimShuffle.supportTable`; DimShuffleSpec pins the two equal for
+    * every ct selection.
+    *
+    * `withConsensus = false` is the over-broadcast-threshold regime:
+    * the dimension is never collected, only a distributed variant-level
+    * aggregate, and `DimShuffle.consensusAnnotate` re-derives `ds_tier_*`
+    * with shuffle joins (the kernel then emits empty support lists).
     */
   def build(spark: SparkSession, dim: DataFrame, ctCfg: CtConfig,
             selectCt: Either[String, Seq[String]] = Left("highest"),
             withConsensus: Boolean = true): DimIndex = {
-
-    // variant-level records, ordered by first appearance in the scan
-    val variantRows = dim
-      .groupBy(col("gene_key"), col("var_id"))
-      .agg(first(col("var_name")).as("var_name"),
-        first(col("hgvs")).as("hgvs"),
-        min(col("dim_order")).as("var_order"))
-      .collect()
-
-    // consensus support vectors per variant (PREDICTIVE only,
-    // ct-selected; reference: match.py:1420-1463). ONE definition of
-    // the aggregation feeds both regimes: this is the collected form
-    // of DimShuffle.supportTable, so broadcast-vs-shuffle parity
-    // (q59/DimShuffleSpec) cannot drift between two copies.
-    val supportRows = if (!withConsensus) Array.empty[org.apache.spark.sql.Row]
-    else DimShuffle.supportTable(dim, ctCfg, selectCt).collect()
+    import spark.implicits._
 
     // (gene, var) -> (drug, ct) -> counts
     val supByVar = mutable.HashMap.empty[(String, String), mutable.HashMap[(String, String), Array[Long]]]
-    for (r <- supportRows) {
-      val key = (r.getString(0), r.getString(1))
-      val m = supByVar.getOrElseUpdate(key, mutable.HashMap.empty)
-      m((r.getString(2), r.getString(3))) =
-        Array(r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7))
+    val variants: Seq[VariantRec] = if (withConsensus) {
+      val leaves = dim
+        .select(col("gene_key"), col("var_id"), col("var_name"), col("hgvs"),
+          col("dim_order"), col("mp_id"), col("evidence_type"), col("drug"),
+          col("direction"), col("significance"),
+          CtClassifier.ctLabel(col("disease"), ctCfg).as("ct"))
+        .as[IndexLeaf].collect().toIndexedSeq
+      // consensus support vectors (PREDICTIVE only, ct-selected;
+      // reference: match.py:1420-1463)
+      val selected = CtClassifier.selectLocal(leaves, selectCt)(_.ct,
+        l => (l.gene_key, l.var_id, l.mp_id, l.evidence_type))
+      for (l <- selected if l.evidence_type == "PREDICTIVE") {
+        val cnt = supByVar
+          .getOrElseUpdate((l.gene_key, l.var_id), mutable.HashMap.empty)
+          .getOrElseUpdate((l.drug, l.ct), new Array[Long](4))
+        cnt(SupportClasses.indexOf(
+          Nomenclature.drugSupportClass(l.direction, l.significance))) += 1
+      }
+      leaves.groupBy(l => (l.gene_key, l.var_id)).valuesIterator.map { ls =>
+        val l = ls.minBy(_.dim_order)
+        VariantRec(l.gene_key, l.var_id, l.var_name, l.hgvs, l.dim_order)
+      }.toSeq
+    } else {
+      dim.groupBy(col("gene_key"), col("var_id"))
+        .agg(min_by(struct(col("var_name"), col("hgvs")), col("dim_order")).as("v"),
+          min(col("dim_order")).as("var_order"))
+        .select(col("gene_key"), col("var_id"), col("v.var_name"),
+          col("v.hgvs"), col("var_order"))
+        .as[VariantRec].collect().toSeq
     }
 
-    val byGene = variantRows.groupBy(_.getString(0))
-    val genes = byGene.map { case (gene, rows) =>
-      val ordered = rows.sortBy(_.getLong(4)) // var_order
+    val genes = variants.groupBy(_.gene_key).map { case (gene, rows) =>
+      val ordered = rows.sortBy(_.var_order)
       val n = ordered.length
       val varIds = new Array[String](n)
       val varNames = new Array[String](n)
@@ -137,8 +171,8 @@ object DimIndex {
       // gene-level (drug, ct) vocabulary in canonical order
       val geneDrugCts = mutable.SortedSet.empty[(String, Int, String)](
         Ordering.Tuple3(Ordering.String, Ordering.Int, Ordering.String))
-      for ((r, _) <- ordered.zipWithIndex;
-           m <- supByVar.get((gene, r.getString(1)));
+      for (r <- ordered;
+           m <- supByVar.get((gene, r.var_id));
            (drug, ct) <- m.keys)
         geneDrugCts += ((drug, graft.model.Cts.rank(ct), ct))
       val drugCtList = geneDrugCts.toArray
@@ -149,9 +183,9 @@ object DimIndex {
       val varSupCnt = new Array[Array[Long]](n)
 
       for ((r, p) <- ordered.zipWithIndex) {
-        val varId = r.getString(1)
-        val name = r.getString(2).toUpperCase
-        val hgvs = r.getSeq[String](3)
+        val varId = r.var_id
+        val name = r.var_name.toUpperCase
+        val hgvs = r.hgvs
         varIds(p) = varId
         varNames(p) = name
 

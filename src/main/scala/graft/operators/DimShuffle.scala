@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.Nomenclature
 
 /** Shuffle-regime consensus drug support — the non-broadcast
-  * counterpart of the count vectors `DimIndex.build` collects to the
+  * counterpart of the count vectors `DimIndex.build` derives on the
   * driver (reference semantics: match.py:1420-1493).
   *
   * Regime split (mirrors `VersionedDim`): the evidence dimension is
@@ -86,8 +86,10 @@ object DimShuffle {
   }
 
   /** Distributed (gene_key, var_id, drug, ct, pos, neg, unk_b, unk_d)
-    * count table — the same aggregation `DimIndex.build` runs, minus
-    * the `.collect()`.
+    * count table — the shuffle form of the counts `DimIndex.build`
+    * derives on the driver from its one collect (window ct selection
+    * here, `CtClassifier.selectLocal` there). DimShuffleSpec pins the
+    * two equal for "highest", a list and "all".
     */
   def supportTable(dim: DataFrame, ctCfg: CtConfig,
                    selectCt: Either[String, Seq[String]] = Left("highest")): DataFrame = {

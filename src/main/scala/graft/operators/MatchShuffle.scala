@@ -93,19 +93,18 @@ object MatchShuffle {
     import spark.implicits._
 
     // 1. variant-level records with per-gene scan-order positions —
-    //    the same (first var_name/hgvs, min dim_order) derivation
-    //    DimIndex.build collects, kept distributed. The window is
+    //    name/hgvs from the smallest-dim_order row, as `DimIndex.build`
+    //    takes them, kept distributed. The window is
     //    per-gene: per-key cardinality is one gene's variant count
     //    (the same boundedness GeneDim assumes), never the dimension.
     val wGene = Window.partitionBy(col("gene_key")).orderBy(col("var_order"))
     val varMeta = CacheRegistry.persistTrackedDs(dim
       .groupBy(col("gene_key"), col("var_id"))
-      .agg(upper(first(col("var_name"))).as("var_name"),
-        first(col("hgvs")).as("hgvs"),
+      .agg(min_by(struct(col("var_name"), col("hgvs")), col("dim_order")).as("v"),
         min(col("dim_order")).as("var_order"))
       .withColumn("pos", (row_number().over(wGene) - 1).cast("int"))
-      .select(col("gene_key"), col("var_id"), col("var_name"),
-        col("hgvs"), col("pos"))
+      .select(col("gene_key"), col("var_id"),
+        upper(col("v.var_name")).as("var_name"), col("v.hgvs"), col("pos"))
       .as[VariantRaw]
       .map { v =>
         val e = DimIndex.variantIndexEntries(v.var_name, v.hgvs)

@@ -124,19 +124,24 @@ object OutputAssembly {
   }
 
   /** Build the broadcastable per-variant render table from the
-    * (filtered, ct-annotated+selected) dimension rows.
+    * filtered dimension: one collect of the rows with their
+    * `CtClassifier.ctLabel`, ct selection and rendering on the driver
+    * (`buildRendersDist` is the shuffle-regime form; DimShuffleSpec
+    * pins the two equal for every ct selection).
     */
   def buildRenders(spark: SparkSession, dim: DataFrame, ctCfg: CtConfig,
                    selectCt: Either[String, Seq[String]] = Left("highest"),
                    writeCt: Boolean = false,
                    writeComplete: Boolean = false): Broadcast[Map[(String, String), VarRender]] = {
     import spark.implicits._
-    val ctSel = CtClassifier.select(CtClassifier.annotate(dim, ctCfg), selectCt)
-    val collected = ctSel
-      .select(struct(dim.columns.toIndexedSeq.map(col): _*).as("_1"), col("ct").as("_2"))
-      .as[(EvidenceRow, String)].collect()
+    val labelled = dim
+      .select(struct(dim.columns.toIndexedSeq.map(col): _*).as("_1"),
+        CtClassifier.ctLabel(col("disease"), ctCfg).as("_2"))
+      .as[(EvidenceRow, String)].collect().toIndexedSeq
+    val selected = CtClassifier.selectLocal(labelled, selectCt)(_._2,
+      { case (r, _) => (r.gene_key, r.var_id, r.mp_id, r.evidence_type) })
     spark.sparkContext.broadcast(
-      buildRendersLocal(collected.toIndexedSeq, writeCt, writeComplete))
+      buildRendersLocal(selected, writeCt, writeComplete))
   }
 
   /** Driver-side assembly (dimension is broadcast-small). */

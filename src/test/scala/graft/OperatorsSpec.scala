@@ -28,11 +28,15 @@ class OperatorsSpec extends AnyFunSuite {
   }
   private val turnCfg = Synth.TurnGenConfig(nConvs = 20, turnsPerConv = 8, nGenes = 12)
 
+  // hand-authored reference-format examples (src/test/resources)
+  private def example(kind: String): String =
+    getClass.getResource(s"/example_$kind.txt").getPath
+
   test("S1-S3: reference-format TSV readers parse the committed examples") {
     def dataRows(path: String): Long =
       scala.io.Source.fromFile(path).getLines().size - 1L
 
-    val snvPath = "/root/reference/civicutils/data/example_snv.txt"
+    val snvPath = example("snv")
     val snv = TsvReader.readSnvs(spark, snvPath)
     assert(snv.count() == dataRows(snvPath))
     val r = snv.orderBy("n_line").collect()(0)
@@ -41,18 +45,18 @@ class OperatorsSpec extends AnyFunSuite {
     // this example carries no optional impact/exon columns: empty strings
     assert(r.getAs[String]("impact") == "" && r.getAs[String]("exon") == "")
 
-    val cnvPath = "/root/reference/civicutils/data/example_cnv.txt"
+    val cnvPath = example("cnv")
     val cnv = TsvReader.readCnvs(spark, cnvPath)
     assert(cnv.count() == dataRows(cnvPath))
-    val exprPath = "/root/reference/civicutils/data/example_expr.txt"
+    val exprPath = example("expr")
     val expr = TsvReader.readExpr(spark, exprPath)
     assert(expr.count() == dataRows(exprPath))
     assert(expr.select("logfc").collect().forall(r => !r.isNullAt(0)))
   }
 
   test("splittable TSV reader: parity with the per-file reader + split invariance") {
-    // parity on the committed reference example
-    val snvPath = "/root/reference/civicutils/data/example_snv.txt"
+    // parity on the committed reference-format example
+    val snvPath = example("snv")
     def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.select("n_line", "gene", "dna", "prot", "impact", "exon", "variant_key")
         .collect().map(_.toString).sorted.toSeq

@@ -129,7 +129,7 @@ class PlanQualitySpec extends AnyFunSuite {
 
   test("TSV reader line numbering never funnels through one partition") {
     val snv = graft.sources.TsvReader.readSnvs(spark,
-      "/root/reference/civicutils/data/example_snv.txt")
+      getClass.getResource("/example_snv.txt").getPath)
     val plan = snv.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange SinglePartition"),
       "per-file window degraded to a global single-partition exchange:\n" + plan)
